@@ -233,23 +233,21 @@ def next_round() -> int:
     return max(ahead) if ahead else current
 
 
-def prior_best_per_query(
-    current_round: int, sf: float | None = None
-) -> dict[str, float]:
-    """Best (minimum) recorded mean per query across all PRIOR rounds'
-    payloads — driver-recorded ``BENCH_r*.json`` and the committed
-    ``BENCH_local_r*.json`` — restricted to payloads at the SAME sf
-    (comparing an sf0.01 smoke run against sf0.1 history would flag
-    nonsense both ways).  This is the reference point for the
-    automatic regression tripwire (VERDICT r4 item 5): round 3's
-    "12 queries slower" scare was diagnosed by hand; now the payload
-    carries the per-query deltas itself."""
+def prior_payloads(
+    current_round: int, sf: float | None = None, cpus: int | None = None
+) -> list[tuple[Path, dict]]:
+    """``(path, payload)`` for every PRIOR round's bench payload —
+    driver-recorded ``BENCH_r{N}[_c{C}].json`` and the committed
+    ``BENCH_local_r{N}.json`` — recorded at the SAME sf and cpus
+    (``None`` matches any).  An sf0.01 smoke run against sf0.1 history,
+    or an 8-core rerun against 32-core history, would flag nonsense
+    both ways."""
     import re
 
     here = Path(__file__).resolve().parent
-    best: dict[str, float] = {}
+    out = []
     for p in sorted(here.glob("BENCH_*r*.json")):
-        m = re.match(r"BENCH_(?:local_)?r(\d+)\.json$", p.name)
+        m = re.match(r"BENCH_(?:local_)?r(\d+)(?:_c\d+)?\.json$", p.name)
         if not m or int(m.group(1)) >= current_round:
             continue
         try:
@@ -258,6 +256,23 @@ def prior_best_per_query(
             continue
         if sf is not None and payload.get("sf") != sf:
             continue
+        if cpus is not None and payload.get("cpus") != cpus:
+            continue
+        out.append((p, payload))
+    return out
+
+
+def prior_best_per_query(
+    current_round: int, sf: float | None = None, cpus: int | None = None
+) -> dict[str, float]:
+    """Best (minimum) recorded mean per query across the
+    :func:`prior_payloads` at the same sf and cpus.  This is the
+    reference point for the automatic regression tripwire (VERDICT r4
+    item 5): round 3's "12 queries slower" scare was diagnosed by hand;
+    now the payload carries the per-query deltas itself."""
+    here = Path(__file__).resolve().parent
+    best: dict[str, float] = {}
+    for _, payload in prior_payloads(current_round, sf, cpus):
         # Compare like with like: the current run trips on per-query
         # BEST repeats, so prefer the prior payload's recorded "best"
         # dict (present from r5 locals onward); fall back to the
@@ -302,9 +317,9 @@ def prior_best_per_query(
 
 
 def prior_scan_rate_anchor(
-    current_round: int, sf: float | None = None
+    current_round: int, sf: float | None = None, cpus: int | None = None
 ) -> float | None:
-    """MEDIAN prior-round ``rows_per_sec_per_core`` (same-sf payloads):
+    """MEDIAN prior-round ``rows_per_sec_per_core`` (same sf and cpus):
     the same-protocol host-speed anchor the drift normalization below
     compares the current run's scan probe against.  Median, not max
     (ADVICE r9): anchoring to the best-EVER rate made relief > 1 on
@@ -314,20 +329,8 @@ def prior_scan_rate_anchor(
     hour).  The median of prior rounds reflects typical same-epoch
     host speed, so relief engages only when the current hour is
     genuinely slower than usual."""
-    import re
-
-    here = Path(__file__).resolve().parent
     rates: list[float] = []
-    for p in sorted(here.glob("BENCH_*r*.json")):
-        m = re.match(r"BENCH_(?:local_)?r(\d+)\.json$", p.name)
-        if not m or int(m.group(1)) >= current_round:
-            continue
-        try:
-            payload = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if sf is not None and payload.get("sf") != sf:
-            continue
+    for _, payload in prior_payloads(current_round, sf, cpus):
         rate = payload.get("rows_per_sec_per_core") or (
             payload.get("parsed") or {}
         ).get("rows_per_sec_per_core")
@@ -535,7 +538,7 @@ def main() -> None:
     host_drift = 1.0
     if scan is not None and scan.get("rows_per_sec_per_core"):
         cur_rate = statistics.median(scan["rows_per_sec_per_core"].values())
-        prior_rate = prior_scan_rate_anchor(round_no, sf=sf)
+        prior_rate = prior_scan_rate_anchor(round_no, sf=sf, cpus=int(cpus))
         if prior_rate and cur_rate > 0:
             host_drift = prior_rate / cur_rate
     # fold in prior same-round runs BEFORE the tripwire: the committed
@@ -548,7 +551,8 @@ def main() -> None:
     # burst must swallow all N repeats to fake a regression, while a
     # real plan regression raises the best too
     reg_names, reg_detail = detect_regressions(
-        bests, prior_best_per_query(round_no, sf=sf), host_drift=host_drift
+        bests, prior_best_per_query(round_no, sf=sf, cpus=int(cpus)),
+        host_drift=host_drift,
     )
     headline = {
         "metric": "suite_mean_sec",

@@ -5,9 +5,9 @@ The driver's per-round report only covers a bounded window of registry
 entries (50 in round 1); this script runs EVERY registered entry against
 its DuckDB oracle at the correctness scale factor and ships the evidence
 with the repo, so no entry is "unverified" just because it fell outside
-the driver's window.  ``suite.registry()`` additionally rotates
-not-yet-driver-verified entries to the front each round, so the driver's
-own window converges to full coverage.
+the driver's window.  ``__spark_entry__.queries()`` additionally rotates
+not-yet-driver-verified entries to the front each round (driver_window.py),
+so the driver's own window converges to full coverage.
 
 Usage::
 

@@ -370,7 +370,7 @@ def regex_extract_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.trim("text") != "")
-    d = F.array_distinct(F.split(F.lower(F.trim("text")), r"[ \t\n\x0B\f\r]+"))
+    d = F.array_distinct(text_ops.tokens("text"))
     stop = F.array([F.lit(w) for w in ["the", "a", "of", "and", "to"]])
     return docs.select(
         "doc_id",

@@ -752,10 +752,12 @@ _DUP_PCT = 60                      # duplicate-token fraction ceiling, percent
     "token_budget_selection / domain mixing downstream.",
 )
 def quality_rule_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from nyc_taxi_data_clickhouse_spark.operators.text import tokens
+
     docs = load_table(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0
     )
-    toks = F.split(F.lower(F.trim("text")), r"[ \t\n\x0B\f\r]+")
+    toks = tokens("text")
     stop = F.array([F.lit(s) for s in
                     ("the", "and", "of", "to", "a", "in", "is", "it",
                      "for", "on")])

@@ -31,15 +31,22 @@ def default_shuffle_partitions() -> int:
     shuffle partitions because this read os.cpu_count() directly —
     the one real mismatch behind the undiagnosable scaling block),
     falling back to os.cpu_count() when unset or non-numeric
-    (e.g. the "*" local-all-cores sentinel)."""
+    (e.g. the "*" local-all-cores sentinel).  A non-numeric
+    SPARK_GRAFT_SHUFFLE is an error."""
+    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE")
+    if shuffle is not None:
+        try:
+            return int(shuffle)
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_SHUFFLE must be an integer, got {shuffle!r}"
+            ) from None
     env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
     try:
         cores = int(env_cpus) if env_cpus else 0
     except ValueError:
         cores = 0
-    if cores <= 0:
-        cores = os.cpu_count() or 8
-    return int(os.environ.get("SPARK_GRAFT_SHUFFLE", cores))
+    return cores if cores > 0 else os.cpu_count() or 8
 
 
 def get_spark(

@@ -1,10 +1,10 @@
-"""Capture .explain("formatted") for named queries into plans/r16/.
+"""Capture .explain("formatted") for named queries into plans/r<N>/.
 
 Usage::
 
-    python plans_r16_capture.py <tag> [query ...]
+    python plans_capture.py --round N <tag> [query ...]
 
-``tag`` is appended to the filename (``plans/r16/<query>_<tag>.txt``);
+``tag`` is appended to the filename (``plans/r<N>/<query>_<tag>.txt``);
 with no query list, every bench.py DEFAULT_QUERIES entry plus
 ``token_budget_packing`` is captured.  Runs at $SPARK_GRAFT_SF_DIR
 (default sf0.1) so the plans match the bench numbers.
@@ -17,6 +17,7 @@ DataFrame's physical plan exactly as ``explain`` prints it.
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -25,21 +26,28 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from nyc_taxi_data_clickhouse_spark import suite
-from nyc_taxi_data_clickhouse_spark.session import get_spark
-
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", type=int, required=True, help="plans/r<N>/ directory")
+    ap.add_argument("tag", help="filename suffix, e.g. before / after")
+    ap.add_argument(
+        "queries", nargs="*", default=[], help="registry entries (default: bench set)"
+    )
+    args = ap.parse_args()
+
+    from nyc_taxi_data_clickhouse_spark import suite
+    from nyc_taxi_data_clickhouse_spark.session import get_spark
+
+    names = args.queries
     if not names:
         from bench import DEFAULT_QUERIES
 
         names = list(DEFAULT_QUERIES) + ["token_budget_packing"]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = Path(__file__).resolve().parent / "plans" / "r16"
+    out_dir = Path(__file__).resolve().parent / "plans" / f"r{args.round}"
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(app_name=f"plans-r16-{tag}")
+    spark = get_spark(app_name=f"plans-r{args.round}-{args.tag}")
     spark.sparkContext.setLogLevel("ERROR")
     reg = suite.registry()
     for name in names:
@@ -51,7 +59,7 @@ def main() -> None:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        path = out_dir / f"{name}_{tag}.txt"
+        path = out_dir / f"{name}_{args.tag}.txt"
         path.write_text(buf.getvalue())
         print(f"wrote {path.name} ({len(buf.getvalue())} bytes)")
         spark.catalog.clearCache()

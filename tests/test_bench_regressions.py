@@ -33,18 +33,18 @@ def test_flags_only_material_slowdowns():
 
 
 def test_prior_best_reads_committed_rounds():
-    """The repo root carries BENCH_r01..r06 + locals; the per-query best
-    must be the minimum across them and exclude the current round.
-    Mirrors bench.prior_best_per_query's source preference: a payload's
-    recorded "best" dict wins over its per-query means, and driver
-    payloads nest the headline under "parsed"."""
-    best = bench.prior_best_per_query(current_round=99)
+    """The repo root carries BENCH_r01.. + locals; the per-query best
+    must be the minimum across the same-(sf, cpus) payloads and exclude
+    the current round.  Mirrors bench.prior_best_per_query's source
+    preference: a payload's recorded "best" dict wins over its
+    per-query means, and driver payloads nest the headline under
+    "parsed"."""
+    best = bench.prior_best_per_query(current_round=99, sf=0.1, cpus=32)
     assert "q1_group_count" in best
     import json
 
     mins: dict[str, float] = {}
-    for p in Path(bench.__file__).resolve().parent.glob("BENCH_*r*.json"):
-        payload = json.loads(p.read_text())
+    for _, payload in bench.prior_payloads(99, sf=0.1, cpus=32):
         parsed = payload.get("parsed") or {}
         source = (
             payload.get("best")
@@ -69,6 +69,22 @@ def test_prior_best_reads_committed_rounds():
     # excluding everything yields an empty reference set (accepts only
     # raise EXISTING references, never mint new ones)
     assert bench.prior_best_per_query(current_round=0) == {}
+
+
+def test_prior_payloads_exclude_other_core_counts():
+    """The 32-core tripwire reference must not see the driver's 8-core
+    reruns (the local r17 payload and the _c8 driver payloads), while
+    an 8-core run gets exactly those as its reference."""
+    eight = {"BENCH_local_r17.json", "BENCH_r15_c8.json", "BENCH_r16_c8.json"}
+    at32 = {p.name for p, _ in bench.prior_payloads(99, sf=0.1, cpus=32)}
+    at8 = {p.name for p, _ in bench.prior_payloads(99, sf=0.1, cpus=8)}
+    assert at32 and not at32 & eight
+    assert eight <= at8
+    # the 8-core rows hold faster bests for some queries, so leaking
+    # them would lower the 32-core reference
+    assert bench.prior_best_per_query(99, sf=0.1) != bench.prior_best_per_query(
+        99, sf=0.1, cpus=32
+    )
 
 
 def test_accepted_baseline_raises_reference_only():

@@ -75,81 +75,35 @@ def test_nanos_invariant_is_set_by_factory(spark):
     )
 
 
-# ---------------------------------------------------------------------------
-# Driver-window ordering (VERDICT r8 item 6): changed-code-first
-# ---------------------------------------------------------------------------
-
-
-def test_ordered_names_changed_code_first():
-    """The pure ordering rule (r11 form): never-verified entries lead
-    in registration order; entries whose green row hit the
-    MUST_REVERIFY_AGE trust bound come next regardless of change
-    status (VERDICT r10 item 1 — the changed tier starved them for
-    five rounds); then changed-implementation entries; then the
-    merely-stale; every verified group stalest-first."""
-    from nyc_taxi_data_clickhouse_spark.suite import _ordered_names
-
-    order = ["a", "b", "c", "d", "e", "f"]
-    verified = {"b": 3, "c": 1, "d": 5, "f": 2}
-    changed = lambda name, rnd: name in {"d", "f"}  # noqa: E731
-    got = _ordered_names(order, verified, changed)
-    # a, e never verified (registration order); c(1) is 4 rounds old
-    # vs latest=5 -> MUST-re-verify tier, ahead of the changed tier
-    # even though it did not change; f(2) & d(5) changed, stalest
-    # first; b(3) merely stale
-    assert got == ["a", "e", "c", "f", "d", "b"]
-
-    # a changed entry that ALSO hits the bound sorts in the must tier
-    verified2 = {"b": 3, "c": 1, "d": 5, "f": 1}
-    got2 = _ordered_names(order, verified2, changed)
-    # c(1, unchanged) and f(1, changed) both at the bound: stalest
-    # first then registration order; d(5) changed; b(3) stale
-    assert got2 == ["a", "e", "c", "f", "d", "b"]
-
-
-def test_ordered_names_no_changes_degrades_to_staleness():
-    from nyc_taxi_data_clickhouse_spark.suite import _ordered_names
-
-    order = ["x", "y", "z"]
-    verified = {"x": 2, "y": 1, "z": 3}
-    got = _ordered_names(order, verified, lambda n, r: False)
-    assert got == ["y", "x", "z"]
-
-
 def test_registry_ordering_uses_git_changed_files():
     """End-to-end: _files_changed_since_round reads real git state and
-    the registry consumes it without error; entries whose registered
-    function SEMANTICALLY changed since their verified round (the
-    entry-granular closure rule the registry uses since r15 — a
-    sibling's edit or a comment does not promote) must sort before
-    unchanged entries of equal-or-staler rounds."""
-    from nyc_taxi_data_clickhouse_spark.suite import (
-        _driver_verified_rounds,
-        _entry_changed_since_round,
-        _files_changed_since_round,
-        registry,
-    )
+    the driver ordering (driver_window.py) consumes it without error;
+    entries whose registered function SEMANTICALLY changed since their
+    verified round (the entry-granular closure rule — a sibling's edit
+    or a comment does not promote) must sort before unchanged entries
+    of equal-or-staler rounds.  The engine registry itself stays in
+    registration order; only the driver's view is reordered."""
+    import __spark_entry__
+    import driver_window as dw
 
-    from nyc_taxi_data_clickhouse_spark.suite import MUST_REVERIFY_AGE
-
-    verified = _driver_verified_rounds()
-    reg = registry()
-    names = list(reg)
+    verified = dw._driver_verified_rounds()
+    reg = suite.registry()
+    names = list(__spark_entry__.queries())
     # every name is present exactly once, whatever the order
-    assert sorted(names) == sorted(set(names))
+    assert sorted(names) == sorted(set(names)) == sorted(reg)
     latest = max(verified.values(), default=0)
-    changed_files = _files_changed_since_round(latest)
+    changed_files = dw._files_changed_since_round(latest)
     assert isinstance(changed_files, frozenset)
     # invariant (r11 rule): never-verified < must-re-verify (at the
     # trust bound) < changed < merely-stale (the sort is total, so it
     # suffices to check group monotonicity) — the changed predicate
-    # here is the registry's own, so the test re-checks the real rule
+    # here is the ordering's own, so the test re-checks the real rule
     def group(n):
         if n not in verified:
             return 0
-        if latest - verified[n] >= MUST_REVERIFY_AGE:
+        if latest - verified[n] >= dw.MUST_REVERIFY_AGE:
             return 1
-        return 2 if _entry_changed_since_round(reg[n], verified[n]) else 3
+        return 2 if dw._entry_changed_since_round(reg[n], verified[n]) else 3
 
     groups = [group(n) for n in names]
     assert groups == sorted(groups)
@@ -164,7 +118,8 @@ def test_registry_ordering_uses_git_changed_files():
 def test_default_shuffle_partitions_honors_spark_graft_cpus(monkeypatch):
     """Pure derivation rule: $SPARK_GRAFT_CPUS wins when numeric,
     $SPARK_GRAFT_SHUFFLE overrides everything, os.cpu_count() is the
-    fallback for unset/non-numeric values."""
+    fallback for unset/non-numeric core counts; a non-numeric
+    $SPARK_GRAFT_SHUFFLE is rejected."""
     import os
 
     from nyc_taxi_data_clickhouse_spark.session import (
@@ -181,6 +136,10 @@ def test_default_shuffle_partitions_honors_spark_graft_cpus(monkeypatch):
     assert default_shuffle_partitions() == (os.cpu_count() or 8)
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     assert default_shuffle_partitions() == (os.cpu_count() or 8)
+    # a non-numeric override is an error that names the variable
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "lots")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE.*'lots'"):
+        default_shuffle_partitions()
 
 
 def test_bench_session_parallelism_matches_spark_graft_cpus():
