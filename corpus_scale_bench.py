@@ -31,18 +31,21 @@ data must be constructed, or the curve measures the data, not the op:
   a small deterministic per-replica perturbation so no two vectors are
   byte-identical.
 
-Output: per-op {rows, sec} points + fitted slopes as JSON to
-``SCALING_r{N}.json`` (round autodetected like bench.py) and a
-markdown table on stdout for BENCH_NOTES.md.
+Output: per-op points + fitted slopes as JSON to ``SCALING_r{N}.json``
+(round from ``bench.next_round()``) and a markdown table on stdout for
+BENCH_NOTES.md.  Each point carries ``rows``, the min-of-k wall ``sec``
+and, for that same run, the stage-metric deltas read from Spark's
+status store (``profile.stage_rows``; no web UI needed):
+``cpu_core_sec`` (executor run time), ``gc_core_sec``, ``shuffle_gb``
+and ``spill_gb``.  Each op also gets GC-excluded run-time slopes
+(``cpu_slope_loglog``, ``cpu_marginal_slope``): the round-7 x128 probe
+showed single-box WALL slopes saturate under host drift and cold/warm
+JIT, while CPU and byte slopes stay clean.
 
 Env: SCALE_FACTORS (default "1,4,16,64"), SCALE_OPS (comma override),
 SCALE_BASE (default /root/testdata/sf0.1), SCALE_REPEATS (default 1,
-min-of-k if >1), SPARK_GRAFT_CPUS (default 32),
-SCALE_CPU_METRICS=1 (capture executor CPU-time / shuffle-byte /
-spill deltas per point via the status API and fit CPU-based slopes —
-the round-7 x128 probe showed single-box WALL slopes saturate under
-host drift and cold/warm JIT, while CPU and byte slopes stay clean;
-needs spark.ui, which adds listener overhead, so off by default).
+min-of-k if >1), SCALE_MODE (replication-mode override for every op),
+SCALE_OUT (payload path), SPARK_GRAFT_CPUS (default 32).
 """
 
 from __future__ import annotations
@@ -59,7 +62,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F
 
+from bench import next_round
 from nyc_taxi_data_clickhouse_spark import suite
+from nyc_taxi_data_clickhouse_spark.profile import stage_rows
 from nyc_taxi_data_clickhouse_spark.session import get_spark
 from nyc_taxi_data_clickhouse_spark.schema import TESTDATA_TABLES
 
@@ -296,17 +301,11 @@ def materialize(spark, base: str, factor: int) -> dict[str, str]:
 
 def stage_totals(spark) -> tuple[float, float, float, float]:
     """(executor-run-time core-sec, shuffle-write GB, spill GB,
-    jvm-GC core-sec) summed over all completed stages, from the status
-    REST API.  Requires spark.ui.enabled (SCALE_CPU_METRICS=1).
+    jvm-GC core-sec) summed over every stage the status store retains.
     executorRunTime INCLUDES GC pauses — report GC separately so a
     single-JVM heap-pressure slope can be told apart from algorithmic
     CPU growth (the round-7 star-CC decomposition)."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages") as r:
-        st = json.load(r)
+    st = stage_rows(spark)
     return (
         sum(s.get("executorRunTime", 0) for s in st) / 1e3,
         sum(s.get("shuffleWriteBytes", 0) for s in st) / 1e9,
@@ -331,18 +330,6 @@ def fit_slope(points: list[tuple[int, float]]) -> float:
     return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom
 
 
-def round_no() -> int:
-    import re
-
-    here = Path(__file__).resolve().parent
-    driver = [
-        int(m.group(1))
-        for p in here.glob("BENCH_r*.json")
-        if (m := re.match(r"BENCH_r(\d+)\.json$", p.name))
-    ]
-    return max(driver, default=0) + 1
-
-
 def main() -> None:
     base = os.environ.get("SCALE_BASE", "/root/testdata/sf0.1")
     factors = [
@@ -364,31 +351,18 @@ def main() -> None:
     if mode_override:
         ops = {k: mode_override for k in ops}
 
-    cpu_metrics = os.environ.get("SCALE_CPU_METRICS") == "1"
-    extra_conf = (
-        {
-            # retainedStages default (1000) can EVICT stages between the
-            # cpu0 and cpu1 samples of a long multi-factor sweep, silently
-            # undercounting deltas (ADVICE r8) — retain enough for the
-            # whole sweep; the non-negativity assert below is the tripwire.
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        }
-        if cpu_metrics
-        else {}
-    )
-    # SCALE_CODEC: shuffle/spill codec A/B hook (VERDICT r15 item 3) —
-    # the decade probes are the only place this repo's shuffles reach
-    # GBs, so spark.io.compression.codec is A/B-able here and nowhere
-    # else (at sf0.1 shuffle volumes are MBs and a codec delta is noise)
-    codec = os.environ.get("SCALE_CODEC")
-    if codec:
-        extra_conf["spark.io.compression.codec"] = codec
     spark = get_spark(
         app_name="corpus-scale-bench",
         master=f"local[{cpus}]",
-        extra_conf=extra_conf or None,
+        # the status store's default 1000 retained stages can EVICT
+        # stages between the cpu0 and cpu1 samples of a long
+        # multi-factor sweep, silently undercounting deltas (ADVICE r8)
+        # — retain enough for the whole sweep; the non-negativity check
+        # below is the tripwire.
+        extra_conf={
+            "spark.ui.retainedStages": "100000",
+            "spark.ui.retainedJobs": "100000",
+        },
     )
     reg = suite.registry()
 
@@ -411,7 +385,6 @@ def main() -> None:
         cpu_pts: list[tuple[int, float]] = []
         for f in factors:
             sf_dir = dirs_by_factor[f][mode]
-            times = []
             # one untimed warmup at the smallest factor only: catches
             # JVM/codegen warm-up without doubling the big-factor cost
             runs = repeats + (1 if f == factors[0] else 0)
@@ -419,29 +392,31 @@ def main() -> None:
             for i in range(runs):
                 spark.catalog.clearCache()
                 spark.sparkContext._jvm.System.gc()
-                cpu0 = stage_totals(spark) if cpu_metrics else None
+                cpu0 = stage_totals(spark)
                 t0 = time.perf_counter()
                 run_fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
                 elapsed = time.perf_counter() - t0
                 if not (f == factors[0] and i == 0):
-                    times.append(elapsed)
-                    if cpu_metrics:
-                        cpu1 = stage_totals(spark)
-                        delta = [b - a for a, b in zip(cpu0, cpu1)]
-                        # a negative delta means the stage store evicted
-                        # entries between samples — the slopes would be
-                        # silently corrupted (ADVICE r8); fail loudly
-                        if any(d < 0 for d in delta):
-                            raise RuntimeError(
-                                f"{name} x{f} run {i}: negative stage-"
-                                f"totals delta {delta} — retainedStages "
-                                "eviction between samples; raise "
-                                "spark.ui.retainedStages"
-                            )
-                        run_metrics.append((elapsed, delta))
-            sec = min(times)
+                    cpu1 = stage_totals(spark)
+                    delta = [b - a for a, b in zip(cpu0, cpu1)]
+                    # a negative delta means the stage store evicted
+                    # entries between samples — the slopes would be
+                    # silently corrupted (ADVICE r8); fail loudly
+                    if any(d < 0 for d in delta):
+                        raise RuntimeError(
+                            f"{name} x{f} run {i}: negative stage-"
+                            f"totals delta {delta} — retainedStages "
+                            "eviction between samples; raise "
+                            "spark.ui.retainedStages"
+                        )
+                    run_metrics.append((elapsed, delta))
+            # report the MIN-wall run's deltas so cpu/shuffle/spill
+            # describe the same execution as `sec` (a cold first repeat
+            # would otherwise inflate a cross-run mean past cores x wall
+            # — observed in the first r7 capture)
+            sec, d = min(run_metrics)
             pts.append((f, sec))
             nrows = (
                 base_rows[
@@ -450,21 +425,16 @@ def main() -> None:
                 ]
                 * f
             )
-            detail[str(f)] = {"rows": nrows, "sec": round(sec, 3)}
-            if run_metrics:
-                # report the MIN-wall run's deltas so cpu/shuffle/spill
-                # describe the same execution as `sec` (a cold first
-                # repeat would otherwise inflate a cross-run mean past
-                # cores x wall — observed in the first r7 capture)
-                d = min(run_metrics)[1]
-                detail[str(f)].update(
-                    cpu_core_sec=round(d[0], 1),
-                    gc_core_sec=round(d[3], 1),
-                    shuffle_gb=round(d[1], 3),
-                    spill_gb=round(d[2], 3),
-                )
-                # GC-excluded CPU is the algorithmic-work signal
-                cpu_pts.append((f, max(d[0] - d[3], 1e-9)))
+            detail[str(f)] = {
+                "rows": nrows,
+                "sec": round(sec, 3),
+                "cpu_core_sec": round(d[0], 1),
+                "gc_core_sec": round(d[3], 1),
+                "shuffle_gb": round(d[1], 3),
+                "spill_gb": round(d[2], 3),
+            }
+            # GC-excluded CPU is the algorithmic-work signal
+            cpu_pts.append((f, max(d[0] - d[3], 1e-9)))
             print(f"{name} x{f}: {sec:.2f}s", file=sys.stderr)
         slope = fit_slope(pts)
         marginal = fit_slope(pts[-2:])
@@ -473,12 +443,9 @@ def main() -> None:
             "points": detail,
             "slope_loglog": round(slope, 3),
             "marginal_slope": round(marginal, 3),
+            "cpu_slope_loglog": round(fit_slope(cpu_pts), 3),
+            "cpu_marginal_slope": round(fit_slope(cpu_pts[-2:]), 3),
         }
-        if cpu_pts:
-            results[name]["cpu_slope_loglog"] = round(fit_slope(cpu_pts), 3)
-            results[name]["cpu_marginal_slope"] = round(
-                fit_slope(cpu_pts[-2:]), 3
-            )
 
     payload = {
         "base": base,
@@ -488,11 +455,9 @@ def main() -> None:
         "base_rows": base_rows,
         "ops": results,
     }
-    if codec:
-        payload["io_compression_codec"] = codec
     out = Path(
         os.environ.get("SCALE_OUT")
-        or Path(__file__).resolve().parent / f"SCALING_r{round_no():02d}.json"
+        or Path(__file__).resolve().parent / f"SCALING_r{next_round():02d}.json"
     )
     out.write_text(json.dumps(payload, indent=2) + "\n")
     print(f"payload -> {out.name}", file=sys.stderr)

@@ -516,7 +516,9 @@ def minhash_lsh_pairs(
     keyed on ``__id`` (the b-leg on (``__id``, ``__sh``), which a
     ``__id`` subset partitioning also satisfies), so every downstream
     shingle-scale exchange reuses the one sized exchange instead of
-    re-shuffling the table at the session width per consumer.
+    re-shuffling the table at the session width per consumer (measured
+    on Spark 4.1.2 with the default, version-dependent
+    ``spark.sql.requireAllClusterKeysForCoPartition``; ADVICE r16).
     """
     rows_per_band = num_hashes // bands
     if shuffle_partitions is None:
@@ -892,16 +894,6 @@ def _union_find_member(edges: DataFrame) -> DataFrame:
 _STAR_SHJ_EDGE_BOUND = 2_000_000
 
 
-def _star_shj_bound() -> int:
-    """Env-overridable for A/B measurement (corpus_scale_bench probes):
-    ``SPARK_GRAFT_STAR_SHJ_BOUND`` — set huge to force the un-hinted
-    planner fallback, 0 to always hint."""
-    import os
-
-    v = os.environ.get("SPARK_GRAFT_STAR_SHJ_BOUND")
-    return int(v) if v else _STAR_SHJ_EDGE_BOUND
-
-
 def connected_components_star(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -944,8 +936,8 @@ def connected_components_star(
     drop; on a cluster the blocks are distributed and this pacing is a
     non-issue, but a SINGLE-JVM stress harness running several
     ~100M-edge invocations back-to-back can outrun the cleaner and
-    exhaust the heap — run one JVM per measurement arm there (the r10
-    star_sizing_probe does; see BENCH_NOTES round 10).
+    exhaust the heap — run one JVM per measurement arm there (see
+    BENCH_NOTES round 10).
     """
     # one eager materialization of the pair pipeline: edges and nodes
     # both force jobs, and each would otherwise re-execute the whole
@@ -981,7 +973,7 @@ def connected_components_star(
         # possible on the build side), so hint shuffle_hash and skip
         # the sorts.  n_edges is already known per round from the
         # fixpoint fingerprint — the gate costs zero extra jobs.
-        if n_edges > _star_shj_bound():
+        if n_edges > _STAR_SHJ_EDGE_BOUND:
             rh = lambda d: d.hint("shuffle_hash")  # noqa: E731
         else:
             rh = lambda d: d  # noqa: E731

@@ -294,8 +294,8 @@ def materialize_big_lineitem(
             # testdata ships midnight-aligned TIMESTAMPs (verified: 0 of
             # 600k rows have a time component); year()/day-boundary
             # filters are lossless on the DATE form and decode 2.2×
-            # faster (scan_profile.py: year-scan 0.31 s -> 0.14 s, q3
-            # 0.75 -> 0.39 s, q4 1.29 -> 0.99 s at 60 M rows).
+            # faster (BENCH_NOTES round-4 scan-gap profile: year-scan 0.31 ->
+            # 0.14 s, q3 0.75 -> 0.39 s, q4 1.29 -> 0.99 s at 60 M rows).
             .withColumn("l_shipdate", F.to_date("l_shipdate"))
             # store the enum-like strings as 1-byte codes and the
             # whole-valued quantity as an int — the reference's

@@ -120,14 +120,14 @@ def get_spark(
         # gain the same invariant; it is never flipped back.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # off-heap column vectors for the vectorized parquet reader:
-        # ~5-10% on scan-bound aggregates (scan_profile.py: q1 0.40 ->
-        # 0.35 s, q4 1.01 -> 0.92 s at 60 M rows) by keeping decoded
-        # batches out of the GC heap — matters more, not less, on busy
-        # multi-tenant executors
+        # ~5-10% on scan-bound aggregates (BENCH_NOTES round-4 scan-gap
+        # profile: q1 0.40 -> 0.35 s, q4 1.01 -> 0.92 s at 60 M rows) by
+        # keeping decoded batches out of the GC heap — matters more, not
+        # less, on busy multi-tenant executors
         .config("spark.sql.columnVector.offheap.enabled", "true")
         # vectorized fast hash map for partial aggregation: ~10% on
-        # multi-key scan aggregates (scan_profile.py: q4 1.01 -> 0.92 s);
-        # no effect on string-keyed q1 (falls back to row-based map)
+        # multi-key scan aggregates (BENCH_NOTES round-4 scan-gap profile:
+        # q4 1.01 -> 0.92 s); no effect on string-keyed q1 (row-based map)
         .config("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
         # NOT set: spark.io.compression.codec (shuffle/spill codec, default
         # lz4).  zstd was A/B'd on the decade probes — the only shapes here

@@ -19,6 +19,18 @@ from pyspark.sql import types as T
 
 from nyc_taxi_data_clickhouse_spark.schema import TRIPS_STAGING_SCHEMA
 
+#: Format options every CSV read and write here shares, so a written
+#: shard always parses back: ``\N`` is NULL, and timestamps have second
+#: precision like the reference export CSV (README.md:311-365).  The NTZ
+#: variant covers parquet columns with isAdjustedToUTC=false, which
+#: surface as TIMESTAMP_NTZ and have their own format option.
+_CSV_FORMAT = {
+    "nullValue": "\\N",
+    "timestampFormat": "yyyy-MM-dd HH:mm:ss",
+    "timestampNTZFormat": "yyyy-MM-dd HH:mm:ss",
+    "dateFormat": "yyyy-MM-dd",
+}
+
 
 def read_trips_csv(
     spark: SparkSession,
@@ -35,11 +47,8 @@ def read_trips_csv(
     """
     return (
         spark.read.schema(schema)
-        .option("nullValue", "\\N")
+        .options(**_CSV_FORMAT)
         .option("emptyValue", "\\N")  # '' -> null, like trans.py
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss")
-        .option("dateFormat", "yyyy-MM-dd")
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
@@ -61,15 +70,8 @@ def write_csv_shards(
         df.write.mode("overwrite")
         .option("compression", compression)
         .option("maxRecordsPerFile", max_records_per_file)
-        .option("nullValue", "\\N")
+        .options(**_CSV_FORMAT)
         .option("emptyValue", "")
-        # second-precision timestamps, like the reference export CSV
-        # (README.md:311-365); must agree with read_trips_csv.  NTZ
-        # variant needed too: parquet columns with isAdjustedToUTC=false
-        # surface as TIMESTAMP_NTZ, which has its own format option.
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss")
-        .option("dateFormat", "yyyy-MM-dd")
         .csv(path)
     )
 
@@ -97,10 +99,8 @@ def read_csv_with_audit(
     )
     return (
         spark.read.schema(audited)
-        .option("nullValue", "\\N")
+        .options(**_CSV_FORMAT)
         .option("emptyValue", "\\N")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .option("dateFormat", "yyyy-MM-dd")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", corrupt_col)
         .csv(path)

@@ -24,14 +24,13 @@ Usage: python plan_report.py [sf_dir]  (default /root/testdata/sf0.01)
 from __future__ import annotations
 
 import io
-import json
 import re
 import sys
-import urllib.request
 from contextlib import redirect_stdout
 
 from bench import DEFAULT_QUERIES
 from nyc_taxi_data_clickhouse_spark import suite
+from nyc_taxi_data_clickhouse_spark.profile import stage_rows
 from nyc_taxi_data_clickhouse_spark.session import get_spark
 
 
@@ -64,13 +63,6 @@ def summarize(plan: str) -> str:
     if arrow:
         bits.append("Arrow Python stage")
     return ", ".join(bits)
-
-
-def _stages(spark) -> list[dict]:
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages") as r:
-        return json.load(r)
 
 
 def executed_stage_counts(before: list[dict], after: list[dict]) -> str:
@@ -106,8 +98,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(
         app_name="plan-report",
+        # the stage store's retention limits; its default 1000 stages
+        # can evict a query's stages before the "after" snapshot
         extra_conf={
-            "spark.ui.enabled": "true",
             "spark.ui.retainedStages": "100000",
             "spark.ui.retainedJobs": "100000",
         },
@@ -136,10 +129,10 @@ def main() -> None:
         # LPA, star-CC) run their checkpoint/count-gate jobs while the
         # entry function builds the plan — that work belongs to the
         # query's executed count
-        before = _stages(spark)
+        before = stage_rows(spark)
         df = spec.spark(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        after = _stages(spark)
+        after = stage_rows(spark)
         plan = formatted_plan(df)
         tree = plan.split("\n\n")[0]  # operator tree; node details follow
         out.append(f"## {name}")

@@ -1,6 +1,7 @@
 """Unit tests for corpus_scale_bench.py — the replication modes must
 preserve the semantics each operator family measures (VERDICT r4
-item 1), or the curves measure fabricated data, not the operators."""
+item 1), or the curves measure fabricated data, not the operators —
+and for the status-store stage metrics it and plan_report.py read."""
 
 from __future__ import annotations
 
@@ -10,6 +11,9 @@ import sys
 from pathlib import Path
 
 from pyspark.sql import functions as F
+
+import plan_report
+from nyc_taxi_data_clickhouse_spark.profile import stage_rows
 
 _spec = importlib.util.spec_from_file_location(
     "corpus_scale_bench",
@@ -112,3 +116,27 @@ def test_embedding_replication_unique_vectors(spark, tmp_path):
         .count()
     )
     assert dup == 0
+
+
+def test_stage_metrics_read_with_ui_off(spark):
+    """The stage metrics come from the status store, which Spark fills
+    with the web UI off: a groupBy write shows up as an executed shuffle
+    map stage, and its stage-totals delta is non-negative with run time
+    on the clock."""
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    before, totals0 = stage_rows(spark), csb.stage_totals(spark)
+    (
+        spark.range(20_000)
+        .groupBy((F.col("id") % 13).alias("k"))
+        .count()
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    after, totals1 = stage_rows(spark), csb.stage_totals(spark)
+    executed = plan_report.executed_stage_counts(before, after)
+    n_shuffle = int(executed.split(" shuffle map stage(s)")[0])
+    assert n_shuffle >= 1, executed
+    delta = [b - a for a, b in zip(totals0, totals1)]
+    assert all(d >= 0 for d in delta), delta
+    assert delta[0] > 0, delta
