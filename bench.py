@@ -117,6 +117,9 @@ DEFAULT_QUERIES = [
     # lesson — a new family gets a baseline row the round it lands)
     "countmin_heavy_hitters",
     "bpe_pair_merge",
+    # simhash's signature table is persisted since round 16; its row
+    # starts the tripwire reference (a name with no prior row is skipped)
+    "dedup_simhash",
 ]
 
 

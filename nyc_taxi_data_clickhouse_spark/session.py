@@ -15,6 +15,7 @@ partition sizing) is what makes plans survive a 100× scale-up.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -47,6 +48,68 @@ def default_shuffle_partitions() -> int:
     except ValueError:
         cores = 0
     return cores if cores > 0 else os.cpu_count() or 8
+
+
+#: share of the host's memory the local driver heap takes by default,
+#: leaving the rest to the python workers, off-heap column vectors and
+#: the page cache (48g on a 128 GiB host)
+DRIVER_MEMORY_SHARE = 3 / 8
+
+
+def _read_text(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
+def _cgroup_limit_files(read: Callable[[str], str | None]) -> list[str]:
+    """The memory-limit file of this process's cgroup, per hierarchy
+    listed in /proc/self/cgroup: v2 ``memory.max``, v1
+    ``memory.limit_in_bytes``."""
+    files = []
+    for line in (read("/proc/self/cgroup") or "").splitlines():
+        parts = line.split(":", 2)
+        if len(parts) != 3:
+            continue
+        _, controllers, rel = parts
+        rel = rel.rstrip("/")
+        if controllers == "":
+            files.append(f"/sys/fs/cgroup{rel}/memory.max")
+        elif "memory" in controllers.split(","):
+            files.append(f"/sys/fs/cgroup/memory{rel}/memory.limit_in_bytes")
+    return files
+
+
+def host_memory_bytes(read: Callable[[str], str | None] = _read_text) -> int | None:
+    """Memory this process may use: the smaller of its cgroup's limit
+    ("max" and v1's near-2^63 "unlimited" lose to MemTotal) and
+    ``MemTotal`` from /proc/meminfo.  None when neither is readable."""
+    found = []
+    for path in _cgroup_limit_files(read):
+        text = (read(path) or "").strip()
+        if text.isdigit():
+            found.append(int(text))
+    for line in (read("/proc/meminfo") or "").splitlines():
+        fields = line.split()
+        if fields[:1] == ["MemTotal:"] and len(fields) >= 2 and fields[1].isdigit():
+            found.append(int(fields[1]) * 1024)
+    return min(found) if found else None
+
+
+def default_driver_memory(read: Callable[[str], str | None] = _read_text) -> str:
+    """Local driver heap: SPARK_GRAFT_DRIVER_MEM if set, else
+    DRIVER_MEMORY_SHARE of the host's memory (``host_memory_bytes``) in
+    MiB, at least Spark's own 1g default, which is also the answer when
+    the host's memory cannot be read."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = host_memory_bytes(read)
+    if total is None:
+        return "1g"
+    return f"{max(1024, int(total * DRIVER_MEMORY_SHARE) >> 20)}m"
 
 
 def get_spark(
@@ -99,7 +162,9 @@ def get_spark(
         # factory's core-count setting.  See BENCH_NOTES round-8
         # partition-scaling probe for the measurements.
         # keep broadcast joins for dim tables (reference joins are all
-        # broadcast-sized, SURVEY §2.3); 64m is safe at 128 GiB driver
+        # broadcast-sized, SURVEY §2.3).  The driver collects and builds
+        # each broadcast relation on its heap, so 64m stays a small share
+        # of any host-sized default (3/8 of a 4 GiB host is 1.5 GiB)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # --- python interchange -------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -137,15 +202,21 @@ def get_spark(
         # MBs (pure noise).  On a NETWORK-bound cluster the byte reduction
         # is the dominant term (guide §1.3 napkin math) — deploys should
         # A/B zstd via extra_conf there; the local default stays lz4.
+        # Spark's generated-class cache keeps 100 entries by default.  One
+        # pass over perfbench's four registry_ops entries generates ~120
+        # classes, so every warm pass recompiled them all (janino: ~0.7 s
+        # of a ~5.2 s pass, 23 % of the JVM's CPU samples).  At 1000 a
+        # warm pass compiles 0 classes (CodegenMetrics); with the schema
+        # memo in suite.load_table, registry_ops pass CPU fell 5.60 ->
+        # 4.06 s on 4 cores (BENCH_NOTES, "Per-query fixed cost").
+        # Static conf: it only takes effect when the JVM starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # non-interactive harness: no web UI
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
-    # local mode: driver memory is the only knob.  Leave headroom for the
-    # python workers on the 128 GiB box.
+    # local mode: driver memory is the only knob
     if master.startswith("local"):
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        builder = builder.config("spark.driver.memory", default_driver_memory())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
 

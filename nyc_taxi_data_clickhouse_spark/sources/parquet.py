@@ -39,8 +39,8 @@ def write_gold(
 
     Plan shape: derive month -> repartition by month (one shuffle,
     co-locating each hive partition's rows) -> sortWithinPartitions on
-    the clustering key -> partitionBy write.  At 100 TB the single
-    shuffle is the unavoidable cost of clustering; everything after is
+    month, then the clustering key -> partitionBy write.  At 100 TB the
+    single shuffle is the unavoidable cost of clustering; everything after is
     map-side.  ``target_partitions`` caps file count per month when a
     month is large (repartition(n, col) spreads via hash of month +
     random tiebreak is NOT used — rows of one month stay together).
@@ -53,8 +53,12 @@ def write_gold(
         repartitioned = with_month.repartition(target_partitions, *parts)
     else:
         repartitioned = with_month.repartition(*parts)
+    # the partition column leads the sort: a planned write requires its
+    # input ordered by the partition column and, when the plan's ordering
+    # does not start with it, replaces the whole sort with one on the
+    # partition column alone, leaving the files unclustered
     (
-        repartitioned.sortWithinPartitions(*GOLD_SORT_COLS)
+        repartitioned.sortWithinPartitions(GOLD_PARTITION_COL, *GOLD_SORT_COLS)
         .write.mode("overwrite")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(GOLD_PARTITION_COL)

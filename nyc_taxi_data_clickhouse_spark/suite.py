@@ -18,18 +18,101 @@ can't flip the hash.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import StructType
 
 from nyc_taxi_data_clickhouse_spark.schema import TESTDATA_TABLES
 
+#: session confs that change the schema Spark infers from parquet footers
+SCHEMA_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def files_fingerprint(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every file under a local
+    path, sorted; None for a non-local or missing path, whose schema is
+    then always inferred."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        return None
+    local = parsed.path if parsed.scheme else path
+    if os.path.isfile(local):
+        st = os.stat(local)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(local):
+        return None
+    out = []
+    for root, _, names in os.walk(local):
+        for n in names:
+            full = os.path.join(root, n)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:  # removed mid-walk: being rewritten
+                return None
+            out.append((os.path.relpath(full, local), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+class SchemaMemo:
+    """Bounded LRU of inferred parquet schemas.
+
+    Reading parquet without a schema runs a footer-inference job
+    (``SchemaMergeUtils.mergeSchemasInParallel`` parallelizes even one
+    footer), the one job every registry entry fired before its action.
+    The key holds the path, its files' fingerprint and the inference
+    confs, so an unchanged table is never re-inferred and a rewritten
+    one, or one read under different confs, always is."""
+
+    def __init__(self, max_entries: int = 256) -> None:
+        self.max_entries = max_entries
+        self._entries: OrderedDict[tuple, StructType] = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def read(self, spark: SparkSession, path: str) -> DataFrame:
+        fingerprint = files_fingerprint(path)
+        if fingerprint is None:
+            return spark.read.parquet(path)
+        key = (path, fingerprint,
+               tuple(spark.conf.get(k) for k in SCHEMA_INFERENCE_CONFS))
+        with self._lock:
+            schema = self._entries.get(key)
+            if schema is not None:
+                self._entries.move_to_end(key)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(path)
+        df = spark.read.parquet(path)
+        schema = df.schema
+        with self._lock:
+            self._entries[key] = schema
+            while len(self._entries) > self.max_entries:
+                self._entries.popitem(last=False)
+        return df
+
+
+#: process-wide, since entries get only (spark, sf_dir): safe to share
+#: because the key holds everything an inferred schema depends on
+_SCHEMAS = SchemaMemo()
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _SCHEMAS.read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(

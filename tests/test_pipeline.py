@@ -108,6 +108,27 @@ def test_gold_write_attach_pruning(spark, trips_staging, tmp_path):
     assert n == back.filter(F.col("pickup_month") == "2015-06").count()
 
 
+def test_gold_files_are_clustered(spark, tmp_path):
+    """X3: every gold file is sorted by (pickup_date, pickup_datetime),
+    so its row-group min/max work as the sparse primary index.  A
+    planned write that needs its own sort on the partition column must
+    not replace the clustering sort."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import make_trips_rows
+    from nyc_taxi_data_clickhouse_spark.schema import TRIPS_STAGING_SCHEMA
+
+    staging = spark.createDataFrame(make_trips_rows(2000, seed=5), TRIPS_STAGING_SCHEMA)
+    gold = tmp_path / "gold"
+    write_gold(curate_trips(staging), str(gold))
+    files = sorted(gold.rglob("*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["pickup_date", "pickup_datetime"])
+        keys = list(zip(t.column(0).to_pylist(), t.column(1).to_pylist()))
+        assert keys == sorted(keys), f"{f.relative_to(gold)} is not clustered"
+
+
 def test_catalog_row_counts(spark, trips_staging):
     """S8/A7: catalog introspection report."""
     from nyc_taxi_data_clickhouse_spark.sources.catalog import table_row_counts

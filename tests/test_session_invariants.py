@@ -142,6 +142,59 @@ def test_default_shuffle_partitions_honors_spark_graft_cpus(monkeypatch):
         default_shuffle_partitions()
 
 
+def test_warm_registry_pass_recompiles_nothing_cached(spark):
+    """Spark's generated-class cache holds a registry pass's working set
+    (~120 classes, more than Spark's default of 100 entries), so running
+    the same entries again compiles next to nothing; at 100 entries the
+    second round recompiles ~117 classes.  Not exactly 0: in some passes
+    graph_pagerank's adaptive plan numbers its codegen stages
+    differently, which changes the source of 2-4 classes."""
+    from tests.conftest import SF_CORRECTNESS
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    reg = suite.registry()
+    names = ("graph_pagerank", "mad_outliers", "denormalize_join", "q1_group_count")
+
+    def compiles_in_one_round() -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        for name in names:
+            reg[name].spark(spark, SF_CORRECTNESS).collect()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    first = compiles_in_one_round()
+    second = compiles_in_one_round()
+    assert second <= 10, (first, second)
+
+
+_MEMINFO = "MemTotal:       16479424 kB\nMemFree:         1000000 kB\n"
+
+
+@pytest.mark.parametrize("files, expected", [
+    # no cgroup limit: 3/8 of MemTotal (16093 MiB -> 6034 MiB)
+    ({"/proc/meminfo": _MEMINFO}, "6034m"),
+    # cgroup v2 limit below MemTotal wins: 3/8 of 4 GiB
+    ({"/proc/self/cgroup": "0::/job\n", "/sys/fs/cgroup/job/memory.max": "4294967296\n",
+      "/proc/meminfo": _MEMINFO}, "1536m"),
+    # cgroup v2 "max" and v1's 2^63 "unlimited" lose to MemTotal
+    ({"/proc/self/cgroup": "0::/\n4:memory:/a\n", "/sys/fs/cgroup/memory.max": "max\n",
+      "/sys/fs/cgroup/memory/a/memory.limit_in_bytes": "9223372036854771712\n",
+      "/proc/meminfo": _MEMINFO}, "6034m"),
+    # cgroup v1 limit: 3/8 of 128 GiB is the old fixed default
+    ({"/proc/self/cgroup": "4:cpu,memory:/a/\n",
+      "/sys/fs/cgroup/memory/a/memory.limit_in_bytes": str(128 << 30)}, "49152m"),
+    # a tiny host still gets Spark's 1g default, and so does an unreadable one
+    ({"/proc/meminfo": "MemTotal: 1048576 kB\n"}, "1024m"),
+    ({}, "1g"),
+])
+def test_default_driver_memory_is_host_sized(monkeypatch, files, expected):
+    from nyc_taxi_data_clickhouse_spark.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert default_driver_memory(files.get) == expected
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory(files.get) == "3g"
+
+
 def test_bench_session_parallelism_matches_spark_graft_cpus():
     """End-to-end in a fresh interpreter/JVM (sessions are process
     global): under the bench entry path, defaultParallelism AND the
